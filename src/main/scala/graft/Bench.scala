@@ -55,10 +55,9 @@ object Bench {
       }
     // Waves run their steps CONCURRENTLY (Spark's scheduler interleaves
     // jobs from multiple threads; local[32] has the slack), sequenced so
-    // every step's cache dependencies were filled by an earlier wave and
-    // no two concurrent steps touch the same cache key — TrieMap
-    // getOrElseUpdate may evaluate a racing thunk twice and the loser's
-    // persisted relation would leak.
+    // every step's cache dependencies were filled by an earlier wave (a
+    // step that shared a key with a concurrent one would only wait for
+    // its single-flight fill).
     // per-wave durations are recorded and emitted ("warmup_waves_cs") so a
     // contended driver host's warmup inflation is attributable per wave —
     // BENCH_r12's warmup ran 69.5 s vs 18.1–19.6 s on quiet runs and the
@@ -96,8 +95,6 @@ object Bench {
     // prefill whack-a-mole doesn't converge on a contended host"). The
     // sweep compiles every plan the timed passes will run, by
     // construction — there is no slot it can miss. It runs SEQUENTIALLY:
-    // concurrent steps must not getOrElseUpdate the same cache key (a
-    // racing TrieMap thunk leaks the loser's persisted relation), and
     // name order lands every shared-memo fill on the same
     // alphabetically-first consumer the timed passes charge. Emitted as
     // the third "warmup_waves_cs" entry; clearResultMemos below evicts
@@ -129,8 +126,8 @@ object Bench {
       "/root/testdata/sf0.001")
     // canonical-path compare: a trailing-slash or symlink spelling of the
     // target dir must select the SEQUENTIAL same-dir arm — a concurrent
-    // sweep over the timed dir would race its unfilled cache keys and
-    // move the shared-memo landing the timed passes charge
+    // sweep over the timed dir would move the shared-memo landing the
+    // timed passes charge
     def canon(p: String) =
       try new java.io.File(p).getCanonicalPath catch { case _: Throwable => p }
     val sweepDir =
@@ -171,22 +168,15 @@ object Bench {
       import scala.concurrent.duration._
       implicit val ec: ExecutionContext = ExecutionContext.global
       // base prefill of the SWEEP dir (waves 1–2b shapes — seconds at
-      // sf0.001) so the concurrent sweep below cannot race two threads
-      // into the same unfilled INDEX-cache key; concurrent WITHIN each
-      // wave exactly like the target dir's waves (disjoint keys by the
-      // same argument), sequential ACROSS waves (dependencies). The only
-      // remaining getOrElseUpdate races are tiny-dir RESULT memos, where
-      // a losing thunk's relation is either deduped by CacheManager's
-      // canonical-plan match or an unmaterialized entry — bounded at this
-      // scale and evicted with everything else by clearResultMemos below.
-      // a timed-out prefill wave ABORTS the sweep (review r19): its
-      // abandoned thunks keep running, and a next wave (or the worker
-      // pool) would race them on the same tiny-dir INDEX cache keys —
-      // the exact getOrElseUpdate double-fill the wave structure exists
-      // to prevent. The timed passes surface whatever went unfilled, and
-      // warmup_failures marks the round warmup-degraded. 5 min per wave
-      // (quiet cost: seconds) keeps the worst case inside the outer
-      // wedge guard: 3×5 + the workers' bound below < 35 min.
+      // sf0.001), so the concurrent sweep workers below find the tiny
+      // dir's INDEX artifacts built; concurrent WITHIN each wave exactly
+      // like the target dir's waves, sequential ACROSS waves
+      // (dependencies). A timed-out prefill wave ABORTS the sweep (review
+      // r19): its abandoned steps keep running, and the workers would
+      // stall behind their fills. The timed passes surface whatever went
+      // unfilled, and warmup_failures marks the round warmup-degraded.
+      // 5 min per wave (quiet cost: seconds) keeps the worst case inside
+      // the outer wedge guard: 3×5 + the workers' bound below < 35 min.
       var prefillOk = true
       def prefill(steps: Seq[() => Long]): Unit =
         if (prefillOk)
@@ -279,12 +269,13 @@ object Bench {
     // 1–2b instead of following them — every graft cache keys on
     // (session, dir), so the sweep's sf0.001 keys (and its /tmp index
     // paths, which carry the dir hash) are DISJOINT from the target dir's
-    // by construction, and the no-two-threads-per-key invariant holds
-    // across the overlap exactly as it holds within a wave. Warmup wall
+    // by construction, and the sweep moves no target-dir memo landing.
+    // Warmup wall
     // becomes max(waves, sweep) + calib, not their sum (r17: 87 s raw =
     // ~20 s waves + ~66 s sweep; overlapped ≈ the sweep leg alone). The
     // same-dir FALLBACK arm stays strictly sequential after the waves:
-    // there the keys are shared and ordering is the race protection.
+    // there the keys are shared and name order decides which query pays
+    // each shared memo.
     val sweepFuture: Option[scala.concurrent.Future[Unit]] =
       if (sweepDir != sfDir) {
         import scala.concurrent.{ExecutionContext, Future}
@@ -590,15 +581,14 @@ object Bench {
     () => operators.TokenPipeline.tokenDictionary(spark, dir).count(),
     () => operators.TokenPipeline.docAggregates(spark, dir).count(),
     // per-doc split assignment (INDEX class since r21) — filled HERE, in
-    // wave 2, because several wave-2b steps read it concurrently and
-    // must find the key already filled (TrieMap getOrElseUpdate race)
+    // wave 2, because several wave-2b steps read it
     () => operators.TextAnalysis.hashSplit(spark, dir).count(),
     () => operators.TextAnalysis.tfidfRaw(spark, dir).count(),
     // ordered-token relation (q70/q84/q106/q107 share it; q106 sorts
     // first in a pass and would otherwise absorb the fill in cold),
     // then the bigram adjacency artifact (q70/q84 fold over it, round
-    // 13) — the latter reads the former, so ONE thunk fills both
-    // sequentially (no intra-wave cache race on the rawTokens key)
+    // 13) — the latter reads the former, so ONE thunk fills both in
+    // dependency order
     () => {
       operators.TextAnalysis.rawTokens(spark, dir).count()
       operators.TextAnalysis.bigramCounts(spark, dir).count()
@@ -619,7 +609,7 @@ object Bench {
     * repFlagCache are a driver boolean + a dup-gated relation (sf0.1 is
     * dup-light, the gate says skip) — cold pays one tiny cached-input
     * aggregate at most. dsirWeightTable reads dsirDocBuckets, so ONE
-    * thunk fills both sequentially (no intra-wave cache race).
+    * thunk fills both in dependency order.
     */
   private[graft] def wave2bSteps(spark: SparkSession,
       dir: String): Seq[() => Long] = Seq(
@@ -636,7 +626,7 @@ object Bench {
     () => operators.Packing.storedPlacement(spark, dir).count(),
     // the eval-side distinct shingle relation, then the per-benchmark
     // bloom bit-sets built from it (q125's index side) — ONE thunk, in
-    // dependency order, so no concurrent step races the shared key
+    // dependency order
     () => {
       operators.Sketches.benchEvalShingles(spark, dir).count()
       operators.Sketches.benchEvalBits(spark, dir).count()

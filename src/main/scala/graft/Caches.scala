@@ -1,170 +1,155 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{ConcurrentHashMap, CopyOnWriteArrayList, ExecutionException, FutureTask}
 
-/** Eviction hook for the per-(session, dir) persisted-relation caches
-  * (TokenPipeline hub + dictionary, Dedup shingles + signatures). Without
-  * it a long-lived session touching many input dirs accumulates unbounded
-  * cached storage, and entries for stopped sessions linger in the maps.
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+
+/** One declared per-(session, dir[, param…]) cache of an operator artifact.
+  * The key is `"<sessionKey>#<dir>[#<param>…]"`, built here and nowhere
+  * else, so eviction can select entries by session and by dir.
+  *
+  * Fills are single-flight per key: the first caller runs `build` on its
+  * own thread, and concurrent callers of the same key wait for that one
+  * build instead of running a duplicate (whose persisted relation would
+  * leak). No lock is held while a build runs its Spark jobs, so a build
+  * may fill other keys, of this cache or another; a build must not read
+  * its own key. A build that throws leaves no entry, and the next call
+  * retries it.
+  */
+final class GraftCache[V] private (val name: String, val kind: GraftCache.Kind,
+    onEvict: (String, V) => Unit) {
+
+  private val entries = new ConcurrentHashMap[String, FutureTask[V]]()
+
+  /** The value for (`spark`, `dir`, `params`), built on first use. */
+  def apply(spark: SparkSession, dir: String, params: Any*)(build: => V): V =
+    fill(GraftCache.key(spark, dir, params))(build)
+
+  private[graft] def fill(key: String)(build: => V): V = {
+    val mine = new FutureTask[V](() => build)
+    val task = entries.putIfAbsent(key, mine) match {
+      case null => mine.run(); mine
+      case other => other
+    }
+    try task.get()
+    catch { case e: ExecutionException =>
+      entries.remove(key, task)
+      throw e.getCause
+    }
+  }
+
+  /** Keys of the completed entries. */
+  private[graft] def keys: Set[String] =
+    entries.asScala.collect { case (k, t) if t.isDone => k }.toSet
+
+  /** Drop every completed entry whose key satisfies `p`, passing its value
+    * to `onEvict`. A build still in flight is left to land. With `quiet`,
+    * an `onEvict` failure (a stopped session's relation) is ignored.
+    */
+  private[graft] def evict(p: String => Boolean, quiet: Boolean = false): Unit =
+    entries.forEach { (k, t) =>
+      if (p(k) && t.isDone && entries.remove(k, t))
+        scala.util.Try(t.get()).foreach { v =>
+          try onEvict(k, v) catch { case _: Throwable if quiet => () }
+        }
+    }
+
+  Caches.register(this)
+}
+
+object GraftCache {
+
+  /** The invalidation class of a cache: what survives a bench pass. */
+  sealed trait Kind
+  /** Precomputable per-item structure (signatures, token hub, weights),
+    * kept resident across passes like a deployment's index.
+    */
+  case object Index extends Kind
+  /** A detection or search output, evicted by [[Caches.clearResultMemos]]
+    * so every pass re-pays it once.
+    */
+  case object Result extends Kind
+
+  def apply[V](name: String, kind: Kind,
+      onEvict: (String, V) => Unit = (_: String, v: V) => free(v)): GraftCache[V] =
+    new GraftCache[V](name, kind, onEvict)
+
+  private[graft] def dirKey(spark: SparkSession, dir: String): String =
+    GraftBridge.sessionKey(spark) + "#" + dir
+
+  private def key(spark: SparkSession, dir: String, params: Seq[Any]): String =
+    (dirKey(spark, dir) +: params.map(_.toString)).mkString("#")
+
+  /** Release a cached relation's blocks; other values hold none. */
+  def free(v: Any): Unit = v match {
+    case df: DataFrame @unchecked =>
+      df.unpersist() // CacheManager-backed relations (persist())
+      // checkpoint-backed relations: unpersist is a no-op there, the RDD
+      // itself holds the blocks
+      GraftBridge.unpersistCheckpointRdds(df)
+    case _ => ()
+  }
+}
+
+/** Eviction over every declared [[GraftCache]]. Without it a long-lived
+  * session touching many input dirs accumulates unbounded cached storage,
+  * and entries for stopped sessions linger.
   */
 object Caches {
 
-  private def maps = Seq(
-    operators.TokenPipeline.cache, operators.TokenPipeline.dictCache,
-    operators.TokenPipeline.statsCache,
-    operators.Dedup.cache, operators.Dedup.dfCache, operators.Dedup.sigCache,
-    operators.Dedup.clusterCache, operators.Dedup.repsCache,
-    operators.Dedup.fpCache, operators.Dedup.cappedCache,
-    operators.Dedup.pairsCache, operators.Dedup.simhashSigCache,
-    operators.Dedup.embRepCache, operators.Dedup.embPairsCache,
-    operators.Similarity.idxCache, operators.Similarity.knnMemo,
-    operators.Sketches.bitsCache, operators.Sketches.bloomMemo,
-    operators.Sketches.benchBitsCache, operators.Sketches.multiBloomMemo,
-    operators.Sketches.multiBenchFpMemo, operators.Sketches.cmsGridCache,
-    operators.Sketches.evalShCache,
-    operators.TextAnalysis.srcTokCache, operators.TextAnalysis.rawTokCache,
-    operators.TextAnalysis.splitCache, operators.TextAnalysis.rawCountsCache,
-    operators.TextAnalysis.tfidfCache, operators.TextAnalysis.dsirCache,
-    operators.TextAnalysis.dsirWtCache, operators.TextAnalysis.bigramCache,
-    operators.TextAnalysis.verdictCache, operators.Packing.placementCache)
+  private val registry = new CopyOnWriteArrayList[GraftCache[_]]()
 
-  /** The RESULT-MEMO subset of [[maps]] (detection/search outputs evicted
-    * per bench pass by [[clearResultMemos]]); everything else in maps is
-    * an INDEX ARTIFACT a deployment keeps resident. mergeMemo (driver
-    * values, no blocks) is result-class too but lives outside maps.
-    */
-  private def resultMaps = Seq(
-    operators.Dedup.clusterCache, operators.Dedup.pairsCache,
-    operators.Dedup.embPairsCache, operators.Similarity.knnMemo,
-    operators.Sketches.bloomMemo, operators.Sketches.multiBloomMemo,
-    operators.Sketches.multiBenchFpMemo,
-    operators.TextAnalysis.verdictCache)
-
-  /** Every INDEX-class cache key for (`spark`, `dir`) — the bench's
-    * warmup-completeness instrument (round 17, VERDICT r16 item 3): keys
-    * present after the final pass but absent after warmup are artifacts
-    * the warmup failed to prefill, so the timed cold pass paid them.
-    * Parameterized entries ("…#dir#param") count like plain ones.
-    */
-  def indexKeys(spark: SparkSession, dir: String): Set[String] = {
-    val key = org.apache.spark.sql.GraftBridge.sessionKey(spark) + "#" + dir
-    maps.filterNot(m => resultMaps.exists(_ eq m))
-      .flatMap(_.keys.filter(k => k == key || k.startsWith(key + "#")))
-      .toSet
-  }
-
-  /** Unpersist and drop every cached relation belonging to `spark`
-    * (other sessions' entries are untouched).
-    */
-  private def free(df: org.apache.spark.sql.DataFrame): Unit = {
-    df.unpersist() // CacheManager-backed relations (persist())
-    // checkpoint-backed relations (dupClusterLabels): unpersist is a no-op
-    // there, the RDD itself holds the blocks
-    org.apache.spark.sql.GraftBridge.unpersistCheckpointRdds(df)
-  }
-
-  /** Evict memoized RESULT relations (the converged cluster labels) while
-    * keeping the building-block caches (shingles, signatures, fingerprints,
-    * token hub) warm. Bench steady-state passes call this between passes:
-    * replaying a memoized final result would measure a cache hit, not the
-    * query — but an engine deployment legitimately keeps its index-like
-    * relations resident, so those stay.
-    */
-  def clearResultMemos(spark: SparkSession): Unit = {
-    val prefix = org.apache.spark.sql.GraftBridge.sessionKey(spark) + "#"
-    operators.Dedup.clusterCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      operators.Dedup.clusterCache.remove(k).foreach(free)
-    }
-    // verified rep-pair relations are detection RESULTS too — each bench
-    // pass must re-pay the band join + Jaccard verify exactly once
-    operators.Dedup.pairsCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      operators.Dedup.pairsCache.remove(k).foreach(free)
-    }
-    // likewise the verified embedding rep-pair relation (q27 pays the
-    // sign-LSH bucket join + cosine verify once per pass, q74 reuses)
-    operators.Dedup.embPairsCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      operators.Dedup.embPairsCache.remove(k).foreach(free)
-    }
-    // and the kNN rung results (exact/IVF/multi-probe/PQ top-K tables):
-    // search RESULTS shared by q28/q29/q55/q105/q115 within a pass,
-    // re-paid once per pass by each rung's first consumer
-    operators.Similarity.knnMemo.keys.filter(_.startsWith(prefix)).foreach { k =>
-      operators.Similarity.knnMemo.remove(k).foreach(free)
-    }
-    // the bloom flag relation is a detection RESULT (q102 pays it once
-    // per pass, q119's audit reuses) — the eval BIT-SET stays (index
-    // artifact, built once per eval benchmark)
-    operators.Sketches.bloomMemo.keys.filter(_.startsWith(prefix)).foreach { k =>
-      operators.Sketches.bloomMemo.remove(k).foreach(free)
-    }
-    // likewise the multi-benchmark flag relation (q125's detection
-    // output) — the per-benchmark BIT-SETS stay (index artifacts)
-    operators.Sketches.multiBloomMemo.keys.filter(_.startsWith(prefix)).foreach { k =>
-      operators.Sketches.multiBloomMemo.remove(k).foreach(free)
-    }
-    // and the per-(doc, benchmark) exact-overlap audit relation (q126
-    // pays it once per pass, q128's sizing report reuses — r19)
-    operators.Sketches.multiBenchFpMemo.keys.filter(_.startsWith(prefix)).foreach { k =>
-      operators.Sketches.multiBenchFpMemo.remove(k).foreach(free)
-    }
-    // learned BPE merge tables are results too (driver values, no blocks)
-    operators.TextAnalysis.mergeMemo.keys.filter(_.startsWith(prefix))
-      .foreach(operators.TextAnalysis.mergeMemo.remove)
-    // the per-doc train verdict embeds the cluster labels (dedup_kept), so
-    // it is a detection RESULT like them — re-paid once per pass by its
-    // alphabetically-first consumer (q81), reused by the rest (q86)
-    operators.TextAnalysis.verdictCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      operators.TextAnalysis.verdictCache.remove(k).foreach(free)
-    }
-  }
-
-  /** Evict every cached relation for ONE (session, input dir) — for
-    * callers that rewrite a dir's contents in place (e.g. the streaming
-    * corpus audit's staging dir) and must not read stale cache entries.
-    */
-  def clearDir(spark: SparkSession, dir: String): Unit = {
-    val key = org.apache.spark.sql.GraftBridge.sessionKey(spark) + "#" + dir
-    // the stored-placement bootstrap lives on DISK beyond its cached read —
-    // without this the next storedPlacement call re-adopts placement built
-    // from the dir's OLD contents (review r18)
-    operators.Packing.deleteStoredPlacementFor(key)
-    maps.foreach { m =>
-      // exact dir entries plus parameterized ones keyed "…#dir#<param>"
-      // (cappedShingles) — both go stale when the dir's contents change
-      m.keys.filter(k => k == key || k.startsWith(key + "#"))
-        .foreach(k => m.remove(k).foreach(free))
-    }
-    operators.Dedup.repFlagCache.remove(key)
-    operators.TextAnalysis.mergeMemo.keys
-      .filter(_.startsWith(key + "#")).foreach(operators.TextAnalysis.mergeMemo.remove)
+  private[graft] def register(c: GraftCache[_]): Unit = {
+    require(!all.exists(_.name == c.name), s"cache ${c.name} declared twice")
+    registry.add(c)
     ()
   }
 
+  /** Every declared cache whose owning object has been initialized (an
+    * uninitialized owner has no entries).
+    */
+  private[graft] def all: Seq[GraftCache[_]] = registry.asScala.toSeq
+
+  private def inDir(key: String)(k: String): Boolean =
+    k == key || k.startsWith(key + "#")
+
+  /** Every INDEX-class cache key for (`spark`, `dir`) — the bench's
+    * warmup-completeness instrument: keys present after the final pass but
+    * absent after warmup are artifacts the warmup failed to prefill, so
+    * the timed cold pass paid them. Parameterized entries ("…#dir#param")
+    * count like plain ones.
+    */
+  def indexKeys(spark: SparkSession, dir: String): Set[String] = {
+    val key = GraftCache.dirKey(spark, dir)
+    all.filter(_.kind == GraftCache.Index).flatMap(_.keys.filter(inDir(key))).toSet
+  }
+
+  /** Evict this session's RESULT entries while keeping its INDEX entries
+    * warm. Bench steady-state passes call this between passes: replaying a
+    * memoized detection result would measure a cache hit, not the query —
+    * but a deployment legitimately keeps its index-like relations resident.
+    */
+  def clearResultMemos(spark: SparkSession): Unit = {
+    val prefix = GraftBridge.sessionKey(spark) + "#"
+    all.filter(_.kind == GraftCache.Result).foreach(_.evict(_.startsWith(prefix)))
+  }
+
+  /** Evict every entry for ONE (session, input dir), parameterized ones
+    * included — for callers that rewrite a dir's contents in place (e.g.
+    * the streaming corpus audit's staging dir) and must not read stale
+    * entries.
+    */
+  def clearDir(spark: SparkSession, dir: String): Unit =
+    all.foreach(_.evict(inDir(GraftCache.dirKey(spark, dir))))
+
+  /** Evict every entry of `spark` (other sessions' entries are untouched). */
   def clear(spark: SparkSession): Unit = {
-    val prefix = org.apache.spark.sql.GraftBridge.sessionKey(spark) + "#"
-    operators.Packing.placementCache.keys.filter(_.startsWith(prefix))
-      .foreach(operators.Packing.deleteStoredPlacementFor)
-    maps.foreach { m =>
-      m.keys.filter(_.startsWith(prefix)).foreach { k =>
-        m.remove(k).foreach(free)
-      }
-    }
-    operators.Dedup.repFlagCache.keys.filter(_.startsWith(prefix))
-      .foreach(operators.Dedup.repFlagCache.remove)
-    operators.TextAnalysis.mergeMemo.keys.filter(_.startsWith(prefix))
-      .foreach(operators.TextAnalysis.mergeMemo.remove)
+    val prefix = GraftBridge.sessionKey(spark) + "#"
+    all.foreach(_.evict(_.startsWith(prefix)))
   }
 
   /** Drop every entry in every cache (test/teardown hammer). */
-  def clearAll(): Unit = {
-    operators.Packing.placementCache.keys
-      .foreach(k => try operators.Packing.deleteStoredPlacementFor(k)
-        catch { case _: Throwable => () })
-    maps.foreach { m =>
-      m.keys.foreach(k => m.remove(k).foreach(df =>
-        try free(df) catch { case _: Throwable => () }))
-    }
-    operators.Dedup.repFlagCache.clear()
-    operators.TextAnalysis.mergeMemo.clear()
-  }
+  def clearAll(): Unit = all.foreach(_.evict(_ => true, quiet = true))
 }

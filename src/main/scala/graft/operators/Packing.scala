@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.GraftCache
+import graft.GraftCache.Index
+
 /** Context-window packing — the batch-forming step of LLM pretraining
   * (extension surface; the reference is strictly an ETL binary): documents
   * are concatenated in a deterministic corpus order (doc_id) and the token
@@ -200,21 +203,24 @@ object Packing {
     * the explicit-path forms (windowSegmentsForBatch,
     * materializePackedFrom, appendPackedShards), which thread capacity
     * and verify it against the sidecar.
+    *
+    * Evicting the cached read also deletes the on-disk bootstrap: otherwise
+    * the next call would adopt placement built from the dir's OLD contents
+    * after an in-place rewrite.
     */
-  private[graft] val placementCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val placementCache = GraftCache[DataFrame]("Packing.placementCache", Index,
+    (key, df) => { GraftCache.free(df); deleteStoredPlacementFor(key) })
 
   def storedPlacement(spark: SparkSession, dir: String): DataFrame =
-    placementCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        val path = PackingIndexPath(spark, dir) + "-stored"
-        if (readState(spark, path).isEmpty)
-          updatePackingIndex(spark, tokenCounts(spark, dir), path)
-        readPackingIndex(spark, path)
-          .select("doc_id", "n_toks", "start_tok", "first_win", "last_win",
-            "n_windows")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+    placementCache(spark, dir) {
+      val path = PackingIndexPath(spark, dir) + "-stored"
+      if (readState(spark, path).isEmpty)
+        updatePackingIndex(spark, tokenCounts(spark, dir), path)
+      readPackingIndex(spark, path)
+        .select("doc_id", "n_toks", "start_tok", "first_win", "last_win",
+          "n_windows")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** q123 — the q122 window-segment map derived from the STORED q121
     * placement artifact instead of a per-run corpus re-sort (VERDICT r17
@@ -655,13 +661,8 @@ object Packing {
     org.apache.spark.sql.GraftBridge
       .sessionDirPath("graft-packing-index", spark, dir)
 
-  /** Delete one (session, dir) `-stored` bootstrap from DISK — the cache-
-    * teardown hook Caches.clearDir/clear/clearAll call with the cache key
-    * ("<sessionKey>#<dir>"): dropping the cached read alone is not enough,
-    * because the next [[storedPlacement]] call would adopt the on-disk
-    * index built from the dir's OLD contents after an in-place rewrite
-    * (review r18 — the clearDir contract is "must not read stale
-    * entries", and this artifact lives outside the TrieMaps).
+  /** Delete one (session, dir) `-stored` bootstrap from DISK, given its
+    * [[placementCache]] key ("<sessionKey>#<dir>").
     */
   private[graft] def deleteStoredPlacementFor(key: String): Unit = {
     val i = key.indexOf('#')

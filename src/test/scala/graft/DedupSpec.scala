@@ -626,6 +626,32 @@ class DedupSpec extends AnyFunSuite {
     assert(got === want)
   }
 
+  test("unionFindFits: the fast-path gate is overflow-safe at its boundaries") {
+    import Dedup.{unionFindFits, PropagateUnionFindMaxEdges => bound}
+    // the edge count is a Spark job: it must run only when the vertex
+    // count alone cannot decide
+    var counted = 0
+    def fits(nVerts: Long, nSym: Long): Boolean =
+      unionFindFits(nVerts, { counted += 1; nSym })
+    def uncounted(r: => Boolean): Boolean = {
+      val c = counted; val v = r; assert(counted === c, "edge count ran"); v
+    }
+    assert(uncounted(fits(0L, 0L)))
+    // 2000² = the bound: any edge set among 2000 vertices fits uncounted
+    assert(uncounted(fits(2000L, Long.MaxValue)))
+    // 2001 vertices: decided by the counted edges
+    assert(fits(2001L, bound - 2001L))
+    assert(!fits(2001L, bound - 2000L))
+    assert(counted === 2)
+    assert(fits(bound, 0L))
+    assert(!fits(bound, 1L))
+    // above the bound the loop runs, whatever the edge count says — the
+    // old gate wrapped nSym + nVerts (5M) and nVerts² (≥ ~3.04e9) negative
+    Seq(bound + 1, 5000000L, 3100000000L, Long.MaxValue).foreach { n =>
+      assert(!uncounted(fits(n, 0L)), s"fast path taken at $n vertices")
+    }
+  }
+
   test("dupGraphStats/sharedSpans: collapse ≡ doc-level enumeration on verbatim copies") {
     // Same planted shape as the minhashNearDups collapse test: doc 0 near-
     // dups doc 1, docs 2..5 verbatim copies of 0 (K6 component), 6/7 a

